@@ -5,7 +5,7 @@ consume) expressed as ONE batch DataFrame DAG:
     binaryFile scan -> format dispatch (S6) -> extract (S2/S4/S5)
       -> quality gate (F1) -> [LLM-normalize T2, bypassed when clean]
       -> markdown chunk (T4/T6) -> mmh3 ids (T8) -> prefix (T7)
-      -> dropDuplicates(id)   [O11: dedup BEFORE the expensive embed]
+      -> dedup(id)   [O11: dedup BEFORE the expensive embed]
       -> embed (T9) -> chunks + embeddings parquet (K2/K3)
 
 The reference's process choreography -- atomic claims (ST6), Redis
@@ -19,11 +19,13 @@ how the reference's own test suite mocks them (SURVEY section 5). The
 stub boundary is the ``mapInPandas`` batch -- swapping in a real
 endpoint changes no plan shape.
 
-Scale: the DAG is map-only until ``dropDuplicates`` (one shuffle on
-chunk id -- content-addressed, so uniformly distributed) and the final
-write. Embed happens after dedup, so duplicate content is embedded
-once. Writes partition by ``document_id`` prefix to keep per-file
-locality without small-file explosion.
+Scale: the DAG has two shuffles, the per-document markdown assembly
+(keyed by path) and the dedup (keyed by chunk id -- content-addressed,
+so uniformly distributed); everything else is map-only. Embed
+happens after dedup, so duplicate content is embedded once. With an
+output directory the staging files are read once: the chunks are
+written first and the embed stage reads them back from that parquet,
+so the extract -> chunk -> dedup prefix never runs a second time.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ import re
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text_quality as tq
@@ -267,6 +269,18 @@ def chunk_stage(pages: DataFrame, max_chars: int = 600,
     return pages.mapInPandas(run, schema)
 
 
+def dedup_chunks(chunks: DataFrame) -> DataFrame:
+    """One row per chunk id. Files with identical bytes share id and
+    document_id but not source_file, so the winner is pinned to
+    ``min(source_file)``: the file a citation names is the same on every
+    run, whatever the shuffle layout."""
+    w_dup = Window.partitionBy("id").orderBy(F.asc("source_file"))
+    return (
+        chunks.withColumn("_rn", F.row_number().over(w_dup))
+        .filter(F.col("_rn") == 1).drop("_rn")
+    )
+
+
 def embed_stage(chunks: DataFrame, model=None, batch_size: int = 25) -> DataFrame:
     """T9 over chunk text -> (id, embedding). Runs AFTER dedup (O11)."""
 
@@ -303,8 +317,6 @@ def ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     INSERT OR REPLACE is equally last-writer-nondeterministic --
     parity on content, determinism on provenance).
     """
-    from pyspark.sql import Window
-
     from ..sources.tables import table
 
     docs = table(spark, sf_dir, "documents")
@@ -330,12 +342,7 @@ def ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path", "file_type", "doc_id",
         F.col("first_page").alias("page"), F.col("markdown").alias("text"),
     )
-    chunks = chunk_stage(docs_md)
-    w_dup = Window.partitionBy("id").orderBy(F.asc("source_file"))
-    chunks = (
-        chunks.withColumn("_rn", F.row_number().over(w_dup))
-        .filter(F.col("_rn") == 1)
-    )
+    chunks = dedup_chunks(chunk_stage(docs_md))
     return chunks.select(
         "id", "source_file", "document_id", "type", "chunk_index", "page",
         F.length("chunk").alias("chunk_len"),
@@ -441,9 +448,14 @@ def ingest_pipeline(
     embed_model=None,
     splitter: str = "spark",
 ) -> tuple[DataFrame, DataFrame]:
-    """The full DAG. Returns (chunks, embeddings); writes parquet when
-    ``out_dir`` is given (atomic job commit replaces the reference's
-    staging-WAL + sentinel finalize). ``splitter="reference"`` chunks
+    """The full DAG. Returns (chunks, embeddings).
+
+    With ``out_dir`` the DAG runs in one pass over the staging files:
+    ``chunks`` is written first, the embed stage reads the written
+    chunks back, and both returned frames are scans of the written
+    parquet (atomic job commit replaces the reference's staging-WAL +
+    sentinel finalize). Without ``out_dir`` both frames stay lazy, and
+    each action on them re-runs the DAG. ``splitter="reference"`` chunks
     with the boundary-exact parity splitter (see ``chunk_stage``), so
     ids match what the reference's producer would have written."""
     # binaryFile scans parallelize by file; a staging dir with fewer
@@ -462,13 +474,12 @@ def ingest_pipeline(
         "path", "file_type", "doc_id",
         F.col("first_page").alias("page"), F.col("markdown").alias("text"),
     )
-    chunks = chunk_stage(docs_md, splitter=splitter)
-    # O11: content-keyed dedup BEFORE the expensive embed stage;
-    # deterministic winner via id (content-addressed, so any row is
-    # byte-identical anyway)
-    chunks = chunks.dropDuplicates(["id"])
-    embeddings = embed_stage(chunks, model=embed_model)
-    if out_dir:
-        chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks")
-        embeddings.write.mode("overwrite").parquet(f"{out_dir}/embeddings")
-    return chunks, embeddings
+    # O11: content-keyed dedup BEFORE the expensive embed stage
+    chunks = dedup_chunks(chunk_stage(docs_md, splitter=splitter))
+    if not out_dir:
+        return chunks, embed_stage(chunks, model=embed_model)
+    chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks")
+    chunks = spark.read.parquet(f"{out_dir}/chunks")
+    embed_stage(chunks, model=embed_model).write.mode("overwrite") \
+        .parquet(f"{out_dir}/embeddings")
+    return chunks, spark.read.parquet(f"{out_dir}/embeddings")

@@ -88,7 +88,8 @@ def _silence_benign_log_noise(spark: SparkSession) -> None:
     DAGScheduler, so every other message from that class -- any level
     -- still reaches the parent appenders. A test injects a synthetic
     DAGScheduler ERROR and asserts it still lands on stderr while the
-    accumulator line is dropped (tests/test_session.py)."""
+    accumulator line is dropped, and that a DAGScheduler INFO line is
+    dropped after ``setLogLevel("ERROR")`` (tests/test_session_logging.py)."""
     try:
         gw = spark.sparkContext._gateway
         jvm = gw.jvm
@@ -96,11 +97,13 @@ def _silence_benign_log_noise(spark: SparkSession) -> None:
         conf = ctx.getConfiguration()
         lc = conf.getLoggerConfig(_DAG_LOGGER)
         if lc.getName() != _DAG_LOGGER:
-            # no dedicated config yet: create one at the inherited
-            # level, additive=True so events still flow to the parent
-            # appenders -- the filter below is its only job
+            # no dedicated config yet: create one with no level of its
+            # own, so it keeps following the root (a later
+            # setLogLevel still reaches it), and additive=True so
+            # events still flow to the parent appenders -- the filter
+            # below is its only job
             lc = jvm.org.apache.logging.log4j.core.config.LoggerConfig(
-                _DAG_LOGGER, lc.getLevel(), True
+                _DAG_LOGGER, None, True
             )
             conf.addLogger(_DAG_LOGGER, lc)
         result = jvm.org.apache.logging.log4j.core.Filter.Result

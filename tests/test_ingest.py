@@ -91,6 +91,60 @@ def test_full_pipeline_writes_and_dedups(spark, staging, tmp_path):
     assert all(abs(r.n2 - 1.0) < 1e-6 for r in norms)
 
 
+@pytest.mark.parametrize("partitions", [1, 4])
+def test_dedup_winner_is_min_source_file(spark, staging, tmp_path, partitions):
+    """b.txt and dup.txt carry identical bytes, so their chunks share id
+    and document_id; the kept row must name the same file on every run,
+    whatever the shuffle layout."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(partitions))
+    try:
+        chunks, _ = ingest.ingest_pipeline(
+            spark, staging, out_dir=str(tmp_path / "out"))
+        kept = [r.source_file for r in chunks.collect()
+                if "plain text file with some simple words" in r.chunk]
+    finally:
+        spark.conf.set(key, prev)
+    assert kept == ["b.txt"]
+
+
+def test_ingest_with_out_dir_runs_the_dag_once(spark, staging, tmp_path):
+    """With an output directory the staging prefix runs once: the
+    normalizer sees each bad page exactly once (a second write pass
+    would run it again), and both returned frames are plain scans of
+    the written parquet."""
+    from selfhosted_rag_doc_chat_prototype_spark.functions import (
+        text_quality as tq,
+    )
+
+    d = tmp_path / "staging"
+    d.mkdir()
+    (d / "b.txt").write_text("plain text file with some simple words inside it")
+    (d / "noise.txt").write_text("@#$% ^&*( )!~ ### $$$ %%% ^^^ &&& *** (((")
+    (d / "d.pdf").write_bytes(b"%PDF-1.4 " + b"x" * 9000)
+    pages = ingest.extract_documents(with_file_type(scan_binary_files(spark, str(d))))
+    n_bad = pages.filter(tq.is_bad_ocr(F.col("text"))).count()
+    assert n_bad >= 1
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def counting_normalizer(texts):
+        seen.add(len(texts))
+        return texts
+
+    chunks, embeddings = ingest.ingest_pipeline(
+        spark, str(d), out_dir=str(tmp_path / "out"),
+        normalizer=counting_normalizer)
+    assert seen.value == n_bad
+    for df in (chunks, embeddings):
+        df.count()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" in plan
+        assert "MapInPandas" not in plan
+    assert seen.value == n_bad
+
+
 def test_markdown_structure_flows_through(spark, staging):
     files = with_file_type(scan_binary_files(spark, staging, glob="a.md"))
     pages = ingest.extract_documents(files)

@@ -2,11 +2,13 @@
 on the whole DAGScheduler logger hid actionable ERRORs; r11 replaces it
 with a message-scoped RegexFilter).
 
-Two assertions, both against a REAL JVM console appender:
+Three assertions, all against a REAL JVM console appender:
 
 1. a synthetic DAGScheduler ERROR still reaches stderr (the filter is
-   NEUTRAL on everything but the accumulator spam), and
-2. the benign ``Failed to update accumulator`` line is denied.
+   NEUTRAL on everything but the accumulator spam),
+2. the benign ``Failed to update accumulator`` line is denied, and
+3. the DAGScheduler config follows the root level: after
+   ``setLogLevel("ERROR")`` its INFO lines are dropped.
 
 The suite's session-scoped JVM inherited its stderr fd before pytest's
 capture machinery existed, so ``capfd`` cannot see it -- the end-to-end
@@ -32,6 +34,10 @@ log = spark.sparkContext._jvm.org.apache.logging.log4j.LogManager \
 log.error("SYNTHETIC-DAG-ERROR-MARKER must still appear")
 log.error("Failed to update accumulator 42 MUST-BE-DENIED")
 log.warn("SYNTHETIC-DAG-WARN-MARKER other levels unaffected")
+spark.sparkContext.setLogLevel("ERROR")
+log.info("SYNTHETIC-DAG-INFO-MARKER below the root level")
+log.error("SYNTHETIC-DAG-LATE-ERROR-MARKER must still appear")
+log.error("Failed to update accumulator 43 MUST-BE-DENIED-LATE")
 spark.stop()
 """
 
@@ -50,6 +56,10 @@ def test_dag_error_passes_accumulator_spam_denied():
     assert "SYNTHETIC-DAG-WARN-MARKER" in err
     # the one benign spam line is dropped before the appenders
     assert "MUST-BE-DENIED" not in err
+    # the dedicated config follows the root level: setLogLevel reaches
+    # it, and the filter keeps working after the level change
+    assert "SYNTHETIC-DAG-INFO-MARKER" not in err
+    assert "SYNTHETIC-DAG-LATE-ERROR-MARKER" in err
 
 
 def test_filter_object_decisions(spark):
